@@ -1,4 +1,4 @@
-.PHONY: help install develop test test-fast bench zip clean
+.PHONY: help install develop test test-fast bench perfbench zip clean
 
 help: ## Show targets
 	@awk 'BEGIN {FS = ":.*?## "} /^[a-zA-Z_-]+:.*?## / {printf "  %-12s %s\n", $$1, $$2}' $(MAKEFILE_LIST)
@@ -20,6 +20,13 @@ test-fast: ## Fail-fast suite run
 
 bench: ## Run the benchmark harness (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS honored)
 	python bench.py
+
+WORKLOAD ?= crawl_filter
+SEED ?= 1
+TRACE ?= 0
+
+perfbench: ## Run the repo benchmark (WORKLOAD=crawl_filter|stream_ingest SEED=N TRACE=0|1)
+	python3 perfbench/run.py --workload $(WORKLOAD) --seed $(SEED) --seconds 8 --trace $(TRACE)
 
 clean: ## Remove build artifacts
 	rm -rf dist build *.egg-info mysql_data_quality_spark.egg-info

@@ -740,11 +740,15 @@ def cmd_stream_filter(args) -> int:
     ``--dedup`` inserts the stateful first-seen-url stage (``--state
     bloom`` for constant-size state on unbounded crawls) before the rule
     plan — the streaming analogue of ``filter --dedup``."""
+    from mysql_data_quality_spark.core.config import load_dotenv, rules_from_env
     from mysql_data_quality_spark.streaming.incremental import (
         raise_progress_retention,
         start_filter_stream,
         stream_input_rows,
     )
+
+    load_dotenv()
+    rules = rules_from_env()
 
     li_model = None
     if getattr(args, "langid_model", None):
@@ -771,6 +775,7 @@ def cmd_stream_filter(args) -> int:
             files_per_trigger=getattr(args, "files_per_trigger", 16),
             langid_model=li_model,
             lm=lm,
+            rules=rules,
         )
         q.awaitTermination()
         n_rows, n_batches = stream_input_rows(q)

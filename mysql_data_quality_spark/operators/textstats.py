@@ -208,13 +208,15 @@ def _winnowing_mins_col(grams: Column, w: int) -> Column:
     previous projection), never the gram-building expression itself: a
     higher-order-function lambda re-evaluates every subexpression of its
     body PER ELEMENT, so inlining the gram builder here turns O(n·w)
-    window minima into O(n²·k) re-hashing.  NOTE a two-projection split
-    is NOT a reliable guard — Catalyst's CollapseProject re-inlined the
-    builder under an explode consumer (measured: still 487s) — which is
-    why :func:`winnowing_fingerprints` abandons array lambdas entirely
-    for an exploded-rows windowed aggregate.  This helper remains only
-    as part of the executable single-expression spec
-    (:func:`winnowing_fingerprints_col`).
+    window minima into O(n²·k) re-hashing.
+
+    :func:`winnowing_fingerprints` calls it as the last of its stacked
+    projections (normalize, character array, gram-hash, window minima):
+    the gram column is materialized by the projection below and
+    referenced several times here, so CollapseProject keeps it an
+    attribute and the minima cost O(n·w) per document with no exchange.
+    :func:`winnowing_fingerprints_col` inlines the gram builder instead
+    — the single-expression spec, fine only for short strings.
     """
     n_grams = F.size(grams)
     mins = F.when(

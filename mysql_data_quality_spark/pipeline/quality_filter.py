@@ -20,6 +20,7 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
+import functools
 from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame
@@ -32,67 +33,38 @@ from mysql_data_quality_spark.core.types import (
 )
 from mysql_data_quality_spark.rules import heuristics, langid, perplexity, pii
 
-#: memoized single-projection select lists for the pure-Column annotate
-#: fast path, keyed by (input columns, text col, claimed-lang col, rules).
-#: Column objects are immutable unresolved expressions, safely reusable
-#: across DataFrames and micro-batches — caching removes both the py4j
-#: expression-construction chatter and all but one analyzer pass per call
-#: (the withColumns chain eagerly analyzed ~6 growing Datasets per
-#: invocation: ~0.9s driver time per call, per micro-batch in streaming).
-_FAST_ANNOTATE_CACHE: dict = {}
 
-
-def _fast_annotate_cols(
+@functools.lru_cache(maxsize=32)
+def _plan_levels(
     in_cols: tuple, text_col: str, claimed_lang: str, rules: tuple | None
-) -> list:
-    """Select lists for the three levels of the fast path above the
-    tokenize projection (features, hits, decision columns) — see
-    ``heuristics.feature_exprs`` for why each shared intermediate must
-    be a materialized attribute, not an inlined expression."""
-    key = (in_cols, text_col, claimed_lang, rules)
-    cached = _FAST_ANNOTATE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # Three select levels mirroring the layered chain's materialization
-    # points exactly (each generated column is referenced by later
-    # levels and contains interpreted HOF subtrees, so it must be a
-    # materialized attribute, not a repeated expression): level F
-    # materializes the features over the `_toks` attribute, level H the
-    # hit columns over the feature attributes, level B the decision
-    # columns over the hit attributes.  Generated columns keep the
-    # exact order the layered withColumns chain appends them; an input
-    # column sharing a generated name is replaced in place (withColumns
-    # semantics).
-    feats = heuristics.feature_exprs(
-        text_col,
-        toks=F.col("_toks"),
-        lines=F.col("_lines"),
-        paras=F.col("_paras"),
+) -> tuple[dict, list, list]:
+    """Select lists of the three levels above the tokenize projection:
+    features (keyed by output name, so a model override can replace
+    its feature in place), hits, decision columns.
+
+    Each level materializes columns that later levels reference several
+    times and that hold interpreted HOF subtrees, so each must be an
+    attribute, not a repeated expression (see
+    ``heuristics.feature_exprs``).  Column objects are immutable
+    unresolved expressions, safely reusable across DataFrames and
+    micro-batches; the memo spares each call the py4j expression
+    construction.  The key never holds a model: overrides are
+    substituted by :func:`annotate`, outside the memo."""
+    cols_f = heuristics.feature_select(in_cols, text_col)
+    hits = heuristics.hit_cols(text_col, claimed_lang, rules)
+    cols_h = heuristics.select_list(
+        cols_f, {f"hit_{n}": c for n, c in hits.items()}
     )
-    hits = heuristics.hit_cols(text_col, claimed_lang, rules)  # attr refs
     severities = heuristics.all_rule_severities(rules)
     drop_names = sorted(
         n for n, s in severities.items() if s in DROP_SEVERITIES
     )
-    gen_f: dict[str, Column] = dict(feats)
-    cols_f = [
-        gen_f.pop(c).alias(c) if c in gen_f else F.col(c) for c in in_cols
-    ]
-    f_schema = list(in_cols) + list(gen_f)
-    cols_f += [c.alias(name) for name, c in gen_f.items()]
-
-    gen_h: dict[str, Column] = {f"hit_{n}": c for n, c in hits.items()}
-    cols_h = [
-        gen_h.pop(c).alias(c) if c in gen_h else F.col(c) for c in f_schema
-    ]
-    a_schema = f_schema + list(gen_h)
-    cols_h += [c.alias(name) for name, c in gen_h.items()]
-
-    # level B: keep/drop_reason/rule_hits over hit attribute references
     href = {n: F.col(f"hit_{n}") for n in hits}
     any_drop: Column = F.lit(False)
     for n in drop_names:
         any_drop = any_drop | href[n]
+    # drop_reason: deterministic (sorted) comma-joined list of violated
+    # drop-severity rules; empty string when kept
     reason_parts = [
         F.when(href[n], F.lit(n)).otherwise(F.lit(None)) for n in drop_names
     ]
@@ -103,19 +75,16 @@ def _fast_annotate_cols(
         F.array(*[F.lit(n) for n in sorted(severities)]),
         F.array(*[href[n] for n in sorted(severities)]),
     )
-    gen_b: dict[str, Column] = {
-        "keep": ~any_drop,
-        "drop_reason": drop_reason,
-        "rule_hits": rule_hits,
-        "scrubbed_text": pii.scrub_col(F.col(text_col)),
-    }
-    cols_b = [
-        gen_b.pop(c).alias(c) if c in gen_b else F.col(c) for c in a_schema
-    ]
-    cols_b += [c.alias(name) for name, c in gen_b.items()]
-    result = (cols_f, cols_h, cols_b)
-    _FAST_ANNOTATE_CACHE[key] = result
-    return result
+    cols_b = heuristics.select_list(
+        cols_h,
+        {
+            "keep": ~any_drop,
+            "drop_reason": drop_reason,
+            "rule_hits": rule_hits,
+            "scrubbed_text": pii.scrub_col(F.col(text_col)),
+        },
+    )
+    return cols_f, list(cols_h.values()), list(cols_b.values())
 
 
 def annotate(
@@ -128,6 +97,10 @@ def annotate(
     langid_model: dict | None = None,
 ) -> DataFrame:
     """pages -> pages + features + hit_<rule> columns + keep/drop/scrub.
+
+    The whole rule plan is four stacked projections: tokens/lines/
+    paragraphs, features, hits, decision columns.  An input column
+    sharing a generated name is replaced in place; the rest append.
 
     ``use_arrow_udfs=True`` swaps the langid / perplexity Column
     implementations for the Arrow-batched pandas UDFs (bit-identical
@@ -148,156 +121,40 @@ def annotate(
     Arrow-batched linear scorer replaces ``det_lang`` — opt-in, since
     the hashed feature space has no SQL oracle twin (the default
     lexicon detector remains the gate-checked path).
-    """
-    if not use_arrow_udfs and lm is None and langid_model is None:
-        # Pure-Column fast path: the whole rule plan as four stacked
-        # projections (tokens/lines/paras, features, hits, decision
-        # columns) with memoized select lists — identical schema, rows,
-        # and physical plan shape to the layered withColumns chain
-        # below; the difference is the chain's eager analyzer passes
-        # over growing intermediate Datasets plus per-call py4j
-        # construction (~0.9s/call) collapsing to ~0.1s, which is what
-        # the streaming micro-batch floor and every bench invocation
-        # pay.
-        # UDF-override paths stay layered: inlining a pandas UDF
-        # expression into its several consumers could duplicate the
-        # ArrowEvalPython node.
-        from mysql_data_quality_spark.functions import text as _T
 
-        cols_f, cols_h, cols_b = _fast_annotate_cols(
-            tuple(pages.columns), text_col, claimed_lang, rules
-        )
-        t = F.col(text_col)
-        return (
-            pages.select(
-                "*",
-                _T.tokens_col(t).alias("_toks"),
-                _T.lines_col(t).alias("_lines"),
-                _T.paragraphs_col(t).alias("_paras"),
-            )
-            .select(*cols_f)
-            .select(*cols_h)
-            .select(*cols_b)
-        )
-    df = heuristics.with_features(pages, text_col)
+    Every override replaces its feature's expression inside the feature
+    level, so the plan keeps one ``ArrowEvalPython`` node holding each
+    UDF once.
+    """
+    toks, in_cols = heuristics.tokenize_level(pages, text_col)
+    cols_f, cols_h, cols_b = _plan_levels(
+        in_cols, text_col, claimed_lang, rules
+    )
+    # feature name -> the Arrow-batched UDF replacing its expression;
+    # a trained model wins over the batched lexicon/unigram UDF
+    t = F.col(text_col)
+    overrides: dict[str, Column] = {}
     if use_arrow_udfs:
-        df = df.withColumns(
-            {
-                "det_lang": langid.detect_pandas_udf()(F.col(text_col)),
-                "avg_logp": perplexity.avg_logprob_pandas_udf()(F.col(text_col)),
-            }
-        )
+        overrides["det_lang"] = langid.detect_pandas_udf()(t)
+        overrides["avg_logp"] = perplexity.avg_logprob_pandas_udf()(t)
     if langid_model is not None:
         from mysql_data_quality_spark.rules import langid_trained
 
-        df = df.withColumn(
-            "det_lang",
-            langid_trained.detect_trained_udf(langid_model)(
-                F.col(text_col)
-            ),
-        )
+        overrides["det_lang"] = langid_trained.detect_trained_udf(
+            langid_model
+        )(t)
     if lm is not None:
         from mysql_data_quality_spark.rules import arpa
 
-        df = df.withColumn(
-            "avg_logp",
-            arpa.avg_logprob_pandas_udf(
-                lm, sc=pages.sparkSession.sparkContext
-            )(F.col(text_col)),
-        )
-
-    hits = heuristics.hit_cols(text_col, claimed_lang, rules)
-    df = df.withColumns({f"hit_{name}": c for name, c in hits.items()})
-
-    severities = heuristics.all_rule_severities(rules)
-    drop_names = sorted(
-        n for n, s in severities.items() if s in DROP_SEVERITIES
-    )
-    any_drop: Column = F.lit(False)
-    for n in drop_names:
-        any_drop = any_drop | F.col(f"hit_{n}")
-
-    # drop_reason: deterministic (sorted) comma-joined list of violated
-    # drop-severity rules; empty string when kept
-    reason_parts = [
-        F.when(F.col(f"hit_{n}"), F.lit(n)).otherwise(F.lit(None))
-        for n in drop_names
-    ]
-    drop_reason = F.array_join(
-        F.filter(F.array(*reason_parts), lambda x: x.isNotNull()), ","
-    )
-
-    rule_hits = F.map_from_arrays(
-        F.array(*[F.lit(n) for n in sorted(severities)]),
-        F.array(*[F.col(f"hit_{n}") for n in sorted(severities)]),
-    )
-
-    return df.withColumns(
-        {
-            "keep": ~any_drop,
-            "drop_reason": drop_reason,
-            "rule_hits": rule_hits,
-            "scrubbed_text": pii.scrub_col(F.col(text_col)),
-        }
-    )
+        overrides["avg_logp"] = arpa.avg_logprob_pandas_udf(
+            lm, sc=pages.sparkSession.sparkContext
+        )(t)
+    if overrides:
+        cols_f = {**cols_f, **{n: c.alias(n) for n, c in overrides.items()}}
+    return toks.select(*cols_f.values()).select(*cols_h).select(*cols_b)
 
 
 DECISION_COLS = ("url", "keep", "drop_reason", "scrubbed_text")
-
-_FAST_DECISIONS_CACHE: dict = {}
-
-
-def _fast_decision_cols(
-    text_col: str, claimed_lang: str, rules: tuple | None
-) -> list:
-    """Memoized select list producing EXACTLY the four decision columns:
-    only the drop-severity hit expressions and the features they need
-    enter the tree (the optimizer pruned the full annotate tree to this
-    anyway — building it pre-pruned skips analyzing the other ~half of
-    the expression forest, which is pure per-call driver cost)."""
-    key = (text_col, claimed_lang, rules)
-    cached = _FAST_DECISIONS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    feats = heuristics.feature_exprs(
-        text_col,
-        toks=F.col("_toks"),
-        lines=F.col("_lines"),
-        paras=F.col("_paras"),
-    )
-    hits = heuristics.hit_cols(text_col, claimed_lang, rules, feats=feats)
-    severities = heuristics.all_rule_severities(rules)
-    drop_names = sorted(
-        n for n, s in severities.items() if s in DROP_SEVERITIES
-    )
-    # level A: materialize the drop-rule hits (each is referenced by
-    # BOTH `keep` and `drop_reason` below and contains interpreted HOF
-    # subtrees — as attributes they evaluate once per row) + the scrub;
-    # level B: the 4-column decision contract over those attributes.
-    cols_a = [
-        F.col("url"),
-        pii.scrub_col(F.col(text_col)).alias("scrubbed_text"),
-        *[hits[n].alias(f"hit_{n}") for n in drop_names],
-    ]
-    href = {n: F.col(f"hit_{n}") for n in drop_names}
-    any_drop: Column = F.lit(False)
-    for n in drop_names:
-        any_drop = any_drop | href[n]
-    reason_parts = [
-        F.when(href[n], F.lit(n)).otherwise(F.lit(None)) for n in drop_names
-    ]
-    drop_reason = F.array_join(
-        F.filter(F.array(*reason_parts), lambda x: x.isNotNull()), ","
-    )
-    cols_b = [
-        F.col("url"),
-        (~any_drop).alias("keep"),
-        drop_reason.alias("drop_reason"),
-        F.col("scrubbed_text"),
-    ]
-    result = (cols_a, cols_b)
-    _FAST_DECISIONS_CACHE[key] = result
-    return result
 
 
 def decisions(
@@ -305,27 +162,16 @@ def decisions(
     use_arrow_udfs: bool = False,
     rules: tuple | None = None,
     langid_model: dict | None = None,
+    lm=None,
 ) -> DataFrame:
-    """The per-document output contract: url -> keep/drop + scrubbed text."""
-    if not use_arrow_udfs and langid_model is None:
-        from mysql_data_quality_spark.functions import text as _T
-
-        cols_a, cols_b = _fast_decision_cols("text", "lang", rules)
-        t = F.col("text")
-        return (
-            pages.select(
-                "*",
-                _T.tokens_col(t).alias("_toks"),
-                _T.lines_col(t).alias("_lines"),
-                _T.paragraphs_col(t).alias("_paras"),
-            )
-            .select(*cols_a)
-            .select(*cols_b)
-        )
+    """The per-document output contract: url -> keep/drop + scrubbed
+    text.  The optimizer prunes :func:`annotate`'s plan to the drop
+    rules and the features they read."""
     return annotate(
         pages,
         use_arrow_udfs=use_arrow_udfs,
         rules=rules,
+        lm=lm,
         langid_model=langid_model,
     ).select(*DECISION_COLS)
 

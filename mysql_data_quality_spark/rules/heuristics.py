@@ -92,34 +92,60 @@ def feature_exprs(
     }
 
 
-def with_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add all feature columns over a materialized ``_toks`` column in
-    exactly TWO Dataset transformations (tokenize, then features — the
-    r6 withColumns chain eagerly analyzed ~4 growing Datasets per call).
-    Matches the ``withColumns`` contract exactly: an input column
-    sharing a feature name (e.g. the documents table's own ``n_chars``)
-    is REPLACED in place; the remaining features append in
-    ``FEATURE_COLS`` order."""
-    feats = feature_exprs(
-        text_col,
-        toks=F.col("_toks"),
-        lines=F.col("_lines"),
-        paras=F.col("_paras"),
-    )
-    existing = set(df.columns)
-    cols = [
-        feats[c].alias(c) if c in feats else F.col(c) for c in df.columns
-    ]
-    cols += [
-        feats[n].alias(n) for n in FEATURE_COLS if n not in existing
-    ]
+#: the tokenize level's materialized arrays (see :func:`feature_exprs`)
+TOKENIZE_COLS = ("_toks", "_lines", "_paras")
+
+
+def tokenize_level(
+    df: DataFrame, text_col: str = "text"
+) -> tuple[DataFrame, tuple[str, ...]]:
+    """Level 0 of the stacked rule plan: ``df`` plus the materialized
+    ``_toks``/``_lines``/``_paras`` arrays.  An input column already
+    named like one of them is dropped first — it would make every later
+    reference ambiguous.  Returns the projection and the input columns
+    it carries."""
+    in_cols = tuple(df.columns)
+    reserved = [c for c in in_cols if c.lower() in TOKENIZE_COLS]
+    if reserved:
+        df = df.drop(*reserved)
+        in_cols = tuple(c for c in in_cols if c not in reserved)
     t = F.col(text_col)
-    return df.select(
-        "*",
-        T.tokens_col(t).alias("_toks"),
-        T.lines_col(t).alias("_lines"),
-        T.paragraphs_col(t).alias("_paras"),
-    ).select(*cols)
+    arrays = (T.tokens_col(t), T.lines_col(t), T.paragraphs_col(t))
+    return (
+        df.select(
+            "*", *[c.alias(n) for n, c in zip(TOKENIZE_COLS, arrays)]
+        ),
+        in_cols,
+    )
+
+
+def select_list(names, gen: dict[str, Column]) -> dict[str, Column]:
+    """One stacked level's select list, keyed by output name: every
+    column in ``names`` passes through, and a generated column sharing
+    an input name REPLACES it in place (``withColumns`` semantics); the
+    remaining generated columns append in ``gen`` order."""
+    out = {n: F.col(n) for n in names}
+    out.update((n, c.alias(n)) for n, c in gen.items())
+    return out
+
+
+def feature_select(in_cols, text_col: str = "text") -> dict[str, Column]:
+    """The feature level's select list over :func:`tokenize_level`:
+    an input column sharing a feature name (e.g. the documents table's
+    own ``n_chars``) is replaced in place; the remaining features append
+    in ``FEATURE_COLS`` order."""
+    toks, lines, paras = (F.col(n) for n in TOKENIZE_COLS)
+    return select_list(
+        in_cols,
+        feature_exprs(text_col, toks=toks, lines=lines, paras=paras),
+    )
+
+
+def with_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Add all feature columns in exactly TWO Dataset transformations:
+    the tokenize level, then the feature level."""
+    toks, in_cols = tokenize_level(df, text_col)
+    return toks.select(*feature_select(in_cols, text_col).values())
 
 
 def features_sql(text: str = "text") -> dict[str, str]:
@@ -163,24 +189,18 @@ class HRule:
     value: float | int | str = 0
     enabled: bool = True
 
-    def hit_col(
-        self, claimed_lang_col: str = "lang", feats: dict | None = None
-    ) -> Column:
-        """``feats`` (name -> Column expression) makes the hit reference
-        the feature EXPRESSION instead of a named column — the
-        single-projection ``annotate`` fast path; omitted, it references
-        the materialized feature column (the layered path)."""
-        ref = (lambda n: feats[n]) if feats is not None else F.col
+    def hit_col(self, claimed_lang_col: str = "lang") -> Column:
+        """The hit over the materialized feature columns."""
         if self.name == "lang_mismatch":
-            det = ref("det_lang")
+            det = F.col("det_lang")
             return (det != F.lit(langid.UNDETERMINED)) & (
                 F.col(claimed_lang_col) != det
             )
         if self.name == "mean_word_length":
             lo, hi = self.value  # type: ignore[misc]
-            c = ref(self.feature)
+            c = F.col(self.feature)
             return (c < F.lit(lo)) | (c > F.lit(hi))
-        c = ref(self.feature)
+        c = F.col(self.feature)
         return {
             "<": c < F.lit(self.value),
             ">": c > F.lit(self.value),
@@ -295,15 +315,12 @@ def hit_cols(
     text_col: str = "text",
     claimed_lang: str = "lang",
     rules: tuple[HRule, ...] | None = None,
-    feats: dict | None = None,
 ) -> dict[str, Column]:
-    """All rule-hit Columns (assumes feature columns already present —
-    or, with ``feats``, hit expressions built directly over the feature
-    expressions for the single-projection fast path).  ``rules``
-    overrides the default registry — the reference's parameterized-rule
-    surface (ValidationRule.parameters)."""
+    """All rule-hit Columns (assumes feature columns already present).
+    ``rules`` overrides the default registry — the reference's
+    parameterized-rule surface (ValidationRule.parameters)."""
     hits: dict[str, Column] = {
-        r.name: r.hit_col(claimed_lang, feats)
+        r.name: r.hit_col(claimed_lang)
         for r in (rules or DEFAULT_RULES)
         if r.enabled
     }

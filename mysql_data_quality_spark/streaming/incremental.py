@@ -73,6 +73,7 @@ def start_filter_stream(
     files_per_trigger: int = 16,
     langid_model: dict | None = None,
     lm=None,
+    rules: tuple | None = None,
 ):
     """Run the quality filter incrementally; decisions land as parquet
     partitioned by ``batch_id``.
@@ -92,10 +93,10 @@ def start_filter_stream(
     corpus-wide view — first-seen-URL is the streaming-correct dedup
     granularity (pair it with url canonicalization upstream).
 
-    ``langid_model`` / ``lm`` are the same trained-model hooks as the
-    batch path (``quality_filter.annotate``): the streaming deployment
-    scores with the SAME weights as its batch twin, so a migration
-    between the two can't silently change decisions.
+    ``langid_model`` / ``lm`` / ``rules`` are the same hooks as the
+    batch path (``quality_filter.decisions``): the streaming deployment
+    scores with the SAME weights and thresholds as its batch twin, so a
+    migration between the two can't silently change decisions.
     """
     stream = stream_pages(spark, input_dir, files_per_trigger)
     if dedup:
@@ -113,7 +114,7 @@ def start_filter_stream(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         write_decisions_batch(
             batch_df, batch_id, output_dir,
-            langid_model=langid_model, lm=lm,
+            langid_model=langid_model, lm=lm, rules=rules,
         )
 
     return (
@@ -130,6 +131,7 @@ def write_decisions_batch(
     output_dir: str,
     langid_model: dict | None = None,
     lm=None,
+    rules: tuple | None = None,
 ) -> None:
     """The idempotent micro-batch writer: decisions land under
     ``output_dir/batch_id=N`` (partition-discovery layout, so readers of
@@ -145,11 +147,8 @@ def write_decisions_batch(
     unbounded-crawl 10^5 micro-batches that is the sink's scaling
     hazard.  Writing straight to the partition path is O(1) per batch
     forever, with identical layout and replay semantics."""
-    dec = (
-        QF.annotate(batch_df, langid_model=langid_model, lm=lm)
-        .select(*QF.DECISION_COLS)
-        if (langid_model is not None or lm is not None)
-        else QF.decisions(batch_df)
+    dec = QF.decisions(
+        batch_df, rules=rules, langid_model=langid_model, lm=lm
     )
     dec.write.mode("overwrite").parquet(
         f"{output_dir}/batch_id={int(batch_id)}"

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Capture .explain('formatted') output for the bench query paths into
-plans/r07/<query>_<tag>.txt (OPTIMIZATION_r07 evidence).
+<out_dir>/<query>_<tag>.txt (e.g. plans/r08/qf_pipeline_before.txt).
 
-Usage: python scripts/capture_plans.py <tag> [query ...]
+Usage: python scripts/capture_plans.py <out_dir> <tag> [query ...]
 """
 from __future__ import annotations
 
@@ -15,13 +15,11 @@ from pyspark.sql import functions as F  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    only = set(sys.argv[2:])
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, tag = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r07",
-    )
     os.makedirs(out_dir, exist_ok=True)
 
     from mysql_data_quality_spark.core.session import get_spark
@@ -65,8 +63,24 @@ def main() -> None:
         sev = heuristics.all_rule_severities(None)
         return QF.annotate(pages).agg(*QF._metric_aggs(sev))
 
+    def _arpa():
+        from bench import _bench_arpa_model
+
+        lm = _bench_arpa_model()
+        return QF.annotate(pages, lm=lm).select(*QF.DECISION_COLS)
+
+    def _langid():
+        from bench import _bench_langid_model
+
+        return QF.decisions(pages, langid_model=_bench_langid_model(spark))
+
     builders = {
         "qf_pipeline": lambda: QF.decisions(pages),
+        "qf_pipeline_arrow_udf": lambda: QF.decisions(
+            pages, use_arrow_udfs=True
+        ),
+        "qf_pipeline_langid_model": _langid,
+        "qf_pipeline_arpa": _arpa,
         "qf_metrics": _metrics,
         "decontaminate": _decon,
         "dsir_resample": _dsir,

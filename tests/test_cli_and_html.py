@@ -648,6 +648,46 @@ class TestCliStreamFilter:
         assert stats["input_rows"] == 80  # read, but deduped before write
         assert spark.read.parquet(out_dir).count() == n1
 
+    def test_stream_filter_applies_rule_env(
+        self, spark, tmp_path, monkeypatch, capsys
+    ):
+        """stream-filter reads DQS_RULE_* like filter/stream-metrics: a
+        threshold override decides exactly like the batch path with the
+        same rules, and an unknown DQS_RULE_ key fails the command."""
+        from mysql_data_quality_spark import cli
+        from mysql_data_quality_spark.core.config import rules_from_env
+        from mysql_data_quality_spark.pipeline import pages as P
+        from mysql_data_quality_spark.pipeline import quality_filter as QF
+        from tests.conftest import SF_SMOKE
+
+        monkeypatch.chdir(tmp_path)  # no stray .env
+        monkeypatch.setenv("DQS_RULE_MIN_WORDS", "60")
+        pages = P.read_pages(spark, SF_SMOKE).orderBy("url").limit(100)
+        in_dir = tmp_path / "in"
+        pages.write.parquet(str(in_dir / "drop1"))
+        out_dir = str(tmp_path / "out")
+        args = ["stream-filter", "--input-dir", f"{in_dir}/*",
+                "--output", out_dir, "--checkpoint", str(tmp_path / "ck")]
+        assert cli.main(args) == 0
+        capsys.readouterr()
+        streamed = (
+            spark.read.parquet(out_dir).drop("batch_id").orderBy("url")
+            .toPandas()
+        )
+        batch = (
+            QF.decisions(pages, rules=rules_from_env()).orderBy("url")
+            .toPandas()
+        )
+        assert len(streamed) == len(batch) == 100
+        for c in batch.columns:
+            assert (streamed[c].values == batch[c].values).all(), c
+        default = QF.decisions(pages).orderBy("url").toPandas()
+        assert (streamed["keep"].values != default["keep"].values).any()
+
+        monkeypatch.setenv("DQS_RULE_MIN_WORD", "5")
+        with pytest.raises(ValueError, match="unknown rule override"):
+            cli.main(args[:-1] + [str(tmp_path / "ck2")])
+
 
 class TestCliFilterHistory:
     def test_filter_dedup_history_across_runs(

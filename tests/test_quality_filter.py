@@ -28,6 +28,25 @@ def pages(spark):
     return P.read_pages(spark, SF_CORRECT)
 
 
+@pytest.fixture(scope="module")
+def override_models():
+    """``annotate`` kwargs for each model-override path: the batched
+    lexicon/unigram UDFs, a tiny trained-langid weights dict and the
+    tiny ARPA model of tests/test_arpa.py."""
+    from mysql_data_quality_spark.rules import arpa
+    from tests.test_arpa import TINY_ARPA
+
+    langid_model = {
+        "dim": 16, "orders": [1, 2], "labels": ["de", "en"],
+        "weights": [[0.0] * 16, [0.1] * 16], "intercepts": [0.0, 0.0],
+    }
+    return (
+        {"use_arrow_udfs": True},
+        {"langid_model": langid_model},
+        {"lm": arpa.parse_arpa(TINY_ARPA)},
+    )
+
+
 def _oracle(duck, sql: str):
     return duck.sql(
         "with pages as (" + P.pages_cte_sql() + ") " + sql + " order by url"
@@ -71,28 +90,104 @@ class TestUdfParity:
         for c in a.columns:
             assert (a[c].values == b[c].values).all(), c
 
-    def test_fast_and_layered_annotate_schema_identical(self, spark, pages):
-        """r7: the memoized select-list fast path (pure-Column default)
-        must produce the IDENTICAL schema — names, order, types — as the
-        layered withColumns chain (still used by the UDF-override
-        paths), or downstream name-based consumers (metrics, CLI,
-        streaming) silently diverge between the two."""
-        fast = QF.annotate(pages)
-        layered = QF.annotate(pages, use_arrow_udfs=True)
-        assert [
-            (f.name, f.dataType) for f in fast.schema.fields
-        ] == [(f.name, f.dataType) for f in layered.schema.fields]
-        # and on a frame whose input columns collide with generated
-        # names (documents carries its own n_chars): replace-in-place
+    def test_fast_and_layered_annotate_schema_identical(
+        self, spark, pages, override_models
+    ):
+        """The pure-Column default and every model override (Arrow UDFs,
+        trained langid, ARPA LM) must produce the IDENTICAL schema —
+        names, order, types — or downstream name-based consumers
+        (metrics, CLI, streaming) silently diverge between the paths.
+        Each override replaces its feature's expression in place in the
+        one builder's feature level."""
         from pyspark.sql import functions as F
 
+        fast = QF.annotate(pages)
         docs = pages.withColumn("n_chars", F.lit(0).cast("bigint"))
         fast2 = QF.annotate(docs)
-        layered2 = QF.annotate(docs, use_arrow_udfs=True)
-        assert [f.name for f in fast2.schema.fields] == [
-            f.name for f in layered2.schema.fields
-        ]
+        for kwargs in override_models:
+            overridden = QF.annotate(pages, **kwargs)
+            assert [
+                (f.name, f.dataType) for f in fast.schema.fields
+            ] == [(f.name, f.dataType) for f in overridden.schema.fields]
+            # and on a frame whose input columns collide with generated
+            # names (documents carries its own n_chars): replace-in-place
+            overridden2 = QF.annotate(docs, **kwargs)
+            assert [f.name for f in fast2.schema.fields] == [
+                f.name for f in overridden2.schema.fields
+            ]
         assert fast2.columns.count("n_chars") == 1
+
+
+class TestRuleBuilder:
+    # pandas UDF function names as they print in the plan, per path
+    UDFS = (["_detect_batch", "_avg_logprob_batch"], ["_detect"], ["batch_bc"])
+
+    def test_each_override_udf_in_one_arrow_node(
+        self, spark, pages, override_models
+    ):
+        """A model override replaces its feature inside the feature
+        level, so both annotate and decisions execute each overriding
+        UDF exactly once, in one ArrowEvalPython node."""
+        import re
+
+        for kwargs, udfs in zip(override_models, self.UDFS):
+            for df in (
+                QF.annotate(pages, **kwargs),
+                QF.decisions(pages, **kwargs),
+            ):
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                nodes = [
+                    ln for ln in plan.splitlines() if "ArrowEvalPython" in ln
+                ]
+                for udf in udfs:
+                    hits = [
+                        len(re.findall(rf"\b{udf}\(", ln)) for ln in nodes
+                    ]
+                    assert sorted(h for h in hits if h) == [1], (udf, plan)
+
+    def test_reserved_input_columns_are_dropped(self, spark, pages):
+        """An input frame that already carries the tokenize level's
+        _toks/_lines/_paras names yields the same rows as the frame
+        without them (those names would otherwise be ambiguous)."""
+        from pyspark.sql import functions as F
+
+        from mysql_data_quality_spark.rules import heuristics
+
+        clash = pages.select(
+            F.lit("x").alias("_toks"),
+            "*",
+            F.lit(1).alias("_lines"),
+            F.array(F.lit("p")).alias("_paras"),
+        )
+        for build in (
+            QF.annotate,
+            QF.decisions,
+            heuristics.with_features,
+        ):
+            want = build(pages)
+            got = build(clash)
+            assert got.columns == want.columns, build
+            assert (
+                got.orderBy("url").collect() == want.orderBy("url").collect()
+            ), build
+
+    def test_plan_memo_is_bounded(self, spark):
+        """The select-list memo is keyed by the input schema; frames
+        with more distinct schemas than its size must not grow it past
+        that size."""
+        from pyspark.sql import functions as F
+
+        base = spark.range(1).select(
+            F.lit("u").alias("url"),
+            F.lit("some text").alias("text"),
+            F.lit("en").alias("lang"),
+        )
+        info = QF._plan_levels.cache_info()
+        for i in range(info.maxsize + 4):
+            QF.annotate(base.withColumn(f"extra_{i}", F.lit(i)))
+        after = QF._plan_levels.cache_info()
+        assert after.misses - info.misses >= info.maxsize + 4
+        assert after.currsize <= after.maxsize
 
 
 class TestDeterminism:
